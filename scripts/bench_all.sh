@@ -23,7 +23,7 @@ SF="${1:-/root/testdata/sf0.1}"
 OUT=/tmp/bench_all_out
 mkdir -p "$OUT"
 if [[ "$INTERLEAVED" == 1 ]]; then
-  IB_SF_DIR="$SF" IB_ORACLE_DIR="$OUT" IB_JSON="$OUT/bench_interleaved.json" \
+  SPARK_GRAFT_SF_DIR="$SF" IB_ORACLE_DIR="$OUT" IB_JSON="$OUT/bench_interleaved.json" \
     sbt -batch "Test/runMain graft.tools.InterleavedBench" | tail -3
   python3 scripts/bench_compare.py "$SF" "$OUT" "$OUT/bench_interleaved.json"
   echo "BENCH_COMPARE.md regenerated from $OUT/bench_interleaved.json (interleaved)"

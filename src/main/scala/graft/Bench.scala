@@ -18,13 +18,19 @@ object Bench {
   // freshly recorded reference value whenever the workload changes.
   private val CanaryWorkload = "md5x4M-32task-agg97-v1"
 
-  def main(args: Array[String]): Unit = {
-    val tStart = System.nanoTime()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** Data directory of every bench run: SPARK_GRAFT_SF_DIR. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The bench session, shared by [[main]] and the measurement tools:
+    * `local[SPARK_GRAFT_CPUS]` with as many shuffle partitions, UTC,
+    * AQE with partition coalescing, a 64 MB broadcast threshold, an
+    * 8192-entry codegen cache, and no UI.
+    */
+  def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName("graft-bench")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -39,6 +45,13 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val tStart = System.nanoTime()
+    val sfDir = Bench.sfDir
+    val spark = session("graft-bench")
 
     // JVM/codegen warmup outside the timings (driver measures wall
     // clock per query; class-loading noise would land on the first).
@@ -188,12 +201,17 @@ object Bench {
       }
     } catch { case _: Throwable => None }
 
-  private def median(xs: List[Double]): Double = xs match {
-    case Nil => 0.0
-    case _ =>
+  private[graft] def median(xs: Seq[Double]): Double =
+    if (xs.isEmpty) 0.0
+    else {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
+    }
+
+  // Locale.ROOT: %.3f under a comma-decimal default locale would
+  // emit malformed JSON.
+  private[graft] def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** Emits the bench artifact: the full per-query line to
     * SPARK_GRAFT_BENCH_JSON (the full line outgrew the driver's tail
@@ -220,9 +238,6 @@ object Bench {
     def dropCold(v: List[Double]): List[Double] = if (v.size >= 2) v.init else v
     val results = samples.asScala.toSeq
       .map { case (k, v) => k -> median(dropCold(v)) }.sortBy(_._1)
-    // Locale.ROOT: %.3f under a comma-decimal default locale would
-    // emit malformed JSON.
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\n\\r\\t]", " ") + "\""

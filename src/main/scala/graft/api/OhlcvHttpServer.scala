@@ -195,24 +195,12 @@ final class OhlcvHttpServer(
   // ------------------------------------------------------------ REST
 
   private def exchangeHandler: com.sun.net.httpserver.HttpHandler = ex => {
-    def respond(code: Int, body: String): Unit = {
-      val b = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
     try {
-      val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      val params = q.split("&").filter(_.contains("=")).map { kv =>
-        val i = kv.indexOf('=')
-        java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
-          java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
-      }.toMap
+      val params = queryParams(ex)
       val missing = Seq("exchange", "base_id", "quote_id", "interval")
         .filterNot(params.contains)
       if (missing.nonEmpty)
-        respond(422, s"""{"detail":"missing required parameters: ${missing.mkString(", ")}"}""")
+        respond(ex, 422, s"""{"detail":"missing required parameters: ${missing.mkString(", ")}"}""")
       else {
         val p = OhlcvReader.Params(
           exchange = params("exchange"), baseId = params("base_id"),
@@ -222,13 +210,13 @@ final class OhlcvHttpServer(
           limit = params.get("limit").map(_.toInt).getOrElse(500),
           emptyTs = params.get("empty_ts").exists(_.toBoolean),
           mls = params.get("results_mls").forall(_.toBoolean))
-        respond(200, fetch(p).map(_.json).mkString("[", ",", "]"))
+        respond(ex, 200, fetch(p).map(_.json).mkString("[", ",", "]"))
       }
     } catch {
       case e: IllegalArgumentException =>
-        respond(400, s"""{"detail":${quote(e.getMessage)}}""")
+        respond(ex, 400, s"""{"detail":${quote(e.getMessage)}}""")
       case e: Exception =>
-        respond(500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
+        respond(ex, 500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
     }
   }
 
@@ -237,35 +225,41 @@ final class OhlcvHttpServer(
     * shape); unknown suffixes 404 with FastAPI's detail.
     */
   private def routesHandler: com.sun.net.httpserver.HttpHandler = ex => {
-    def respond(code: Int, body: String): Unit = {
-      val b = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
     val suffix = ex.getRequestURI.getPath.stripPrefix("/api/rest/")
     routes.get(suffix) match {
-      case None => respond(404, """{"detail":"Not Found"}""")
+      case None => respond(ex, 404, """{"detail":"Not Found"}""")
       case Some(route) =>
         try {
-          val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          val params = q.split("&").filter(_.contains("=")).map { kv =>
-            val i = kv.indexOf('=')
-            java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
-              java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
-          }.toMap
+          val params = queryParams(ex)
           val body = route(params).map(row =>
             row.map { case (k, v) => s"${quote(k)}:${jsonValue(v)}" }
               .mkString("{", ",", "}")).mkString("[", ",", "]")
-          respond(200, body)
+          respond(ex, 200, body)
         } catch {
           case e: IllegalArgumentException =>
-            respond(400, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
+            respond(ex, 400, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
           case e: Exception =>
-            respond(500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
+            respond(ex, 500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
         }
     }
+  }
+
+  private def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int, body: String): Unit = {
+    val b = body.getBytes(UTF_8)
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.sendResponseHeaders(code, b.length)
+    ex.getResponseBody.write(b)
+    ex.close()
+  }
+
+  /** The request's query string as decoded key → value pairs. */
+  private def queryParams(ex: com.sun.net.httpserver.HttpExchange): Map[String, String] = {
+    val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+    q.split("&").filter(_.contains("=")).map { kv =>
+      val i = kv.indexOf('=')
+      java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
+        java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
+    }.toMap
   }
 
   private def jsonValue(v: Any): String = v match {

@@ -504,11 +504,6 @@ class TxTable(val spark: SparkSession, val root: String,
     out.view.mapValues(_.toSeq).toMap
   }
 
-  /** Append-commit: stage `df`'s files, then CAS them onto whatever
-    * the latest snapshot is. Never conflicts — concurrent commits
-    * just cost a re-read of the manifest, and no committed file is
-    * ever removed by an append.
-    */
   /** Additive schema evolution on append (the public Delta
     * `mergeSchema` contract): the committed schema is the prior
     * snapshot's fields (order preserved) plus any NEW fields the
@@ -531,6 +526,11 @@ class TxTable(val spark: SparkSession, val root: String,
     StructType(prev.fields ++ next.fields.filterNot(f => prevNames.contains(f.name)))
   }
 
+  /** Append-commit: stage `df`'s files, then CAS them onto whatever
+    * the latest snapshot is. Never conflicts — concurrent commits
+    * just cost a re-read of the manifest, and no committed file is
+    * ever removed by an append.
+    */
   def append(df: DataFrame): Long = commitAppend(stage(df), df.schema)
 
   /** Append-commit of already-staged [[TxFile]]s — the log half of
@@ -678,8 +678,8 @@ class TxTable(val spark: SparkSession, val root: String,
     * small batch into a 100 TB partition costs O(batch), and the
     * change feed delivers exactly the rows this call actually
     * inserted (`n` files).
-    */
-  /** `knownParts`: when the caller already knows the partition values
+    *
+    * `knownParts`: when the caller already knows the partition values
     * the batch carries (e.g. it stamped them itself), passing them
     * skips the `touchedPartitions` distinct+collect job on the commit
     * hot path. The set must COVER the batch — [[stageInto]]'s

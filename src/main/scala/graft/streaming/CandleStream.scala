@@ -133,30 +133,27 @@ object CandleStream {
   }
 
   /** The full live pipeline (reference updater loop, ws/updater.py):
-    * WS stream → closed candles → first-write-wins append into the
-    * date-partitioned base table, every `triggerSecs` (reference
-    * UPDATE_FREQUENCY_SECS=10). Exactly-once = checkpoint + the
-    * idempotent ST4 sink policy (re-delivered batches dedupe against
-    * the table). Returns the running query; stop() to shut down.
+    * WS stream → closed candles → first-write-wins insert into the
+    * date-partitioned base [[graft.storage.TxTable]], every
+    * `triggerSecs` (reference UPDATE_FREQUENCY_SECS=10). Returns the
+    * running query; stop() to shut down.
     *
-    * Scale: each micro-batch appends only to the date partitions its
-    * buckets fall in, and the first-write-wins anti-join reads back
-    * only partitions >= the batch's min date (explicit p_date filter
-    * -> partition pruning), so per-trigger cost tracks the batch, not
-    * the table's age. Long-lived tables still need periodic small-file
-    * compaction (standard for 10s appends).
-    */
-  /** [[runPipeline]] against a [[graft.storage.TxTable]] — the
-    * concurrent-writer-safe form. Each micro-batch stages its files
-    * and append-commits them through the table's transaction log, so
-    * a maintenance rewrite (incremental refresh, compaction —
-    * AggregateMaintenance / TxTable.compact) running at the same
-    * moment can never drop the batch's files: rewrites are
-    * partition-conflict-checked and retried, appends are
-    * never-conflicting (TxLog.scala). First-write-wins (ST4) holds
-    * because the anti-join reads the snapshot the commit builds on.
-    * The reference gets this interleaving safety from Postgres MVCC;
-    * plain-parquet [[runPipeline]] remains for single-writer tables.
+    * Exactly-once = checkpoint + the idempotent ST4 sink policy: each
+    * micro-batch goes through [[graft.storage.TxTable.insertIgnore]],
+    * which anti-joins it against the snapshot of the batch's own date
+    * partitions and commits only the net-new rows. A re-delivered
+    * batch after crash recovery (ST6) inserts nothing and publishes
+    * no version. The insert is conflict-checked against that
+    * snapshot, so a maintenance rewrite (incremental refresh,
+    * compaction — AggregateMaintenance / TxTable.compact) committing
+    * to the same partitions at the same moment makes the sink retry
+    * on the new snapshot instead of dropping or duplicating rows. The
+    * reference gets this interleaving safety from Postgres MVCC.
+    *
+    * Scale: the read-back is pruned to the partitions the batch
+    * touches, so per-trigger cost tracks the batch, not the table's
+    * age; the sink's own periodic compaction (below) keeps the 10 s
+    * appends from piling up small files.
     */
   def runPipelineTx(stream: DataFrame, table: graft.storage.TxTable,
                     checkpoint: String, triggerSecs: Int = 10,
@@ -195,70 +192,15 @@ object CandleStream {
         val parts = table.touchedPartitions(withDate)
         if (parts.nonEmpty) {
           val incoming = CandleOps.dedup(withDate)
+          // the first commit has no snapshot to insert against
           if (table.version < 0) table.append(incoming)
-          else {
-            // first-write-wins against the current snapshot, pruned to
-            // the batch's own partitions (partition pruning at scale);
-            // a re-delivered batch after crash recovery anti-joins to
-            // nothing — the idempotent ST4/ST6 sink policy.
-            val existing = table.read()
-              .filter(col("p_date").cast("string").isInCollection(parts))
-              .select((CandleOps.keyCols :+ "time").map(col): _*)
-            table.append(
-              incoming.join(existing, CandleOps.keyCols :+ "time", "left_anti"))
-          }
+          else table.insertIgnore(incoming, CandleOps.keyCols :+ "time", knownParts = Some(parts))
         }
         if (maintainEvery > 0 &&
             sinceMaintain.incrementAndGet() >= maintainEvery) {
           sinceMaintain.set(0)
           table.compact()
           table.vacuum(vacuumRetain)
-        }
-        ()
-      }
-      .start()
-  }
-
-  def runPipeline(stream: DataFrame, tablePath: String, checkpoint: String,
-                  triggerSecs: Int = 10, watermark: String = "1 hour")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    closedCandles(stream, watermark)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(s"$triggerSecs seconds"))
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions.{col, count, lit, to_date}
-        // ONE driver action per trigger: row count (empty micro-batches
-        // — watermark-advance ticks — must not write: an empty parquet
-        // append creates a schemaless directory that breaks the next
-        // batch's read-back) and min date (prunes the dedup read to the
-        // dates this batch touches — a 10s trigger must not scan months
-        // of partitions) come from a single aggregation of the raw
-        // batch; dedup can't change either, so `incoming` is consumed
-        // exactly once by the write job and needs no cache.
-        val stats = batch
-          .agg(count(lit(1)).as("n"),
-            org.apache.spark.sql.functions.min(to_date(col("time"))).as("d"))
-          .first()
-        if (stats.getLong(0) > 0L) {
-          val incoming = CandleOps.dedup(batch.toDF())
-          // filesystem-agnostic existence check (java.io.File would
-          // always say false on HDFS/S3 and silently disable dedup)
-          val path = new org.apache.hadoop.fs.Path(tablePath)
-          val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val tableExists = fs.exists(path) &&
-            fs.listStatus(path).exists(_.getPath.getName.startsWith("p_date="))
-          val fresh =
-            if (tableExists) {
-              val existing = spark.read.parquet(tablePath)
-                .filter(col("p_date") >= lit(stats.getDate(1)))
-                .select((CandleOps.keyCols :+ "time").map(col): _*)
-              incoming.join(existing, CandleOps.keyCols :+ "time", "left_anti")
-            } else incoming
-          fresh
-            .withColumn("p_date", to_date(col("time")))
-            .write.partitionBy("p_date").mode("append").parquet(tablePath)
         }
         ()
       }

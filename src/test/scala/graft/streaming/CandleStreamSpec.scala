@@ -70,37 +70,32 @@ class CandleStreamSpec extends SparkSpec {
       .first().getAs[Double]("close") == 555.0)
   }
 
-  test("runPipeline: stream -> partitioned table; idempotent across query instances") {
+  test("runPipelineTx: replaying only committed buckets publishes no version") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toFile.getAbsolutePath
-    val table = s"$dir/ohlcvs"
-    val ckpt = s"$dir/ckpt"
+    val dir = java.nio.file.Files.createTempDirectory("pipereplay").toFile.getAbsolutePath
+    val table = new graft.storage.TxTable(spark, s"$dir/ohlcvs")
+    // AvailableNow: each run drains its input, flushes the windows the
+    // watermark closed, and stops — completion is defined by the data
+    def drain(frames: WsCandle*)(ckpt: String): Unit = {
+      val in = MemoryStream[WsCandle]
+      in.addData(frames)
+      val q = CandleStream.runPipelineTx(in.toDF(), table, s"$dir/$ckpt",
+        triggerSecs = 0, watermark = "2 minutes")
+      try assert(q.awaitTermination(120000L), "AvailableNow run did not finish")
+      finally q.stop()
+    }
 
-    val in = MemoryStream[WsCandle]
-    val q = CandleStream.runPipeline(in.toDF(), table, ckpt, triggerSecs = 1, watermark = "2 minutes")
-    try {
-      in.addData(ws(0, 100.0, 1.0), ws(30000, 102.0, 2.0), ws(240000, 110.0, 5.0))
-      q.processAllAvailable()
-      val t1 = spark.read.parquet(table)
-      assert(t1.count() == 1) // 13:45 closed; 13:49 still open
-      assert(t1.first().getAs[Double]("close") == 102.0)
-    } finally q.stop()
+    drain(ws(0, 100.0, 1.0), ws(240000, 110.0, 5.0))("ckpt") // 13:45 closes
+    assert(table.read().count() == 1)
+    val v = table.version
 
-    // a second query instance (fresh checkpoint/state) re-delivering an
-    // overlapping bucket: the table-level anti-join must keep the sink
-    // idempotent regardless of streaming state
-    val in2 = MemoryStream[WsCandle]
-    val q2 = CandleStream.runPipeline(in2.toDF(), table, ckpt + "2", triggerSecs = 1, watermark = "2 minutes")
-    try {
-      in2.addData(ws(5000, 999.0, 9.0), ws(300000, 120.0, 7.0)) // dup bucket + newer
-      q2.processAllAvailable()
-      val t2 = spark.read.parquet(table)
-      // re-sent 13:45 closes again but the anti-join drops it (first
-      // write wins); 13:50 stays open -> table unchanged
-      assert(t2.count() == 1)
-      assert(t2.filter(col("time") === timestamp_millis(lit(t0)))
-        .first().getAs[Double]("close") == 102.0, "first write must win across restarts")
-    } finally q2.stop()
+    // a fresh query instance (crash replay, ST6) re-delivers the
+    // committed 13:45 bucket and nothing else that closes
+    drain(ws(5000, 999.0, 9.0), ws(240000, 110.0, 5.0))("ckpt2")
+    assert(table.version == v, "an all-duplicate batch must not commit")
+    val t = table.read()
+    assert(t.count() == 1)
+    assert(t.first().getAs[Double]("close") == 100.0, "first write must win across restarts")
   }
 
   test("runPipelineTx: tx-log sink stays idempotent and survives a concurrent compaction") {

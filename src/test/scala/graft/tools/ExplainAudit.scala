@@ -1,18 +1,15 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 /** Prints formatted plans for representative queries — the scale
   * checklist: PushedFilters reach the scan, dims broadcast, partial
-  * aggregation before shuffles, WholeStageCodegen coverage.
+  * aggregation before shuffles, WholeStageCodegen coverage. Plans the
+  * named queries (args) or the list below over SPARK_GRAFT_SF_DIR,
+  * in the [[Bench.session]].
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.01"
+    val spark = Bench.session("graft-explain-audit")
+    val d = Bench.sfDir
     val names = if (args.nonEmpty) args.toSeq
       else Seq("rel_join_revenue", "ts_candle_1h", "ts_scan_recent", "llm_minhash_lsh",
         "ts_asof_join", "rel_rollup", "llm_filtered_topk", "llm_lm_score",

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
+import graft.Bench.{f3, median}
 
 /** Interleaved Spark-vs-DuckDB catalog bench (r17 verdict item 5):
   * within every round, each query runs on BOTH engines back to back
@@ -12,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol: one untimed warm round for both engines (JIT, codegen
   * cache, page cache, DuckDB's own warm paths), then IB_ROUNDS
-  * (default 3) timed rounds, per-query MEDIANS. Output: one JSON line
+  * (default 3) timed rounds, per-query MEDIANS, over SPARK_GRAFT_SF_DIR
+  * in the [[Bench.session]]. Output: one JSON line
   * to IB_JSON (default /tmp/bench_interleaved.json) with `queries`
   * (Spark), `duckdbQueries`, `floor`, and `"interleaved": true` —
   * `scripts/bench_compare.py` consumes the embedded DuckDB times
@@ -20,22 +22,10 @@ import org.apache.spark.sql.SparkSession
   */
 object InterleavedBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("IB_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Bench.sfDir
     val rounds = sys.env.getOrElse("IB_ROUNDS", "3").toInt
     val outJson = sys.env.getOrElse("IB_JSON", "/tmp/bench_interleaved.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-interleaved")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("graft-bench-interleaved")
 
     // the timer subprocess needs the CURRENT oracle catalog; an
     // explicit IB_ORACLE_DIR lets bench_all.sh share one dump with
@@ -84,17 +74,11 @@ object InterleavedBench {
     }
     toDuck.close(); proc.waitFor()
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     val floor = median((1 to math.max(rounds, 3)).map { _ =>
       val t0 = System.nanoTime()
       spark.range(32).repartition(2).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     })
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = names.map(n => s""""$n":${f3(median(sparkS(n).toSeq))}""")
       .mkString("{", ",", "}")
     val ds = names.map(n => s""""$n":${f3(median(duckS(n).toSeq))}""")

@@ -1,11 +1,10 @@
 package graft.tools
 
+import graft.Bench
 import graft.api.OhlcvReader
 import graft.core.OhlcvFixture
 import graft.maintenance.AggregateMaintenance
 import graft.streaming.CandleStream
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** End-to-end demo of the OHLCV domain layer through its public API —
   * the "switch from the reference" user journey:
@@ -14,11 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object OhlcvDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("graft-ohlcv-demo")
     import spark.implicits._
 
     val base = OhlcvFixture.ohlcvs(spark, nPairs = 4, rows = 1500).cache()

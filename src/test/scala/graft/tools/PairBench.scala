@@ -1,27 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
 /** Interleaved warm bench of two (or more) named catalog queries in
-  * one session: PB_NAMES=a,b [PB_N=7] [PB_DIR=...]. Round-robins the
-  * queries PB_N times after one warmup pass each and prints per-query
-  * medians — the R16AbProbe protocol generalized to catalog entries,
-  * for design-twin comparisons (e.g. summary path vs exact audit
-  * twin) where BENCH context rounds are too coarse to trust a single
-  * cold profile.
+  * one [[Bench.session]] over SPARK_GRAFT_SF_DIR: PB_NAMES=a,b
+  * [PB_N=7]. Round-robins the queries PB_N times after one warmup
+  * pass each and prints per-query medians — for design-twin
+  * comparisons (e.g. summary path vs exact audit twin) where BENCH
+  * context rounds are too coarse to trust a single cold profile.
   */
 object PairBench {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Bench.session("graft-pairbench")
     val names = sys.env.getOrElse("PB_NAMES", "").split(",").filter(_.nonEmpty)
     require(names.nonEmpty, "PB_NAMES=a,b required")
-    val dir = sys.env.getOrElse("PB_DIR", "/root/testdata/sf0.1")
+    val dir = Bench.sfDir
     val n = sys.env.getOrElse("PB_N", "7").toInt
     def once(q: String): Double = {
       val t0 = System.nanoTime()

@@ -1,28 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
 /** Writes `.explain("formatted")` output for named catalog queries to
   * files: PD_NAMES=a,b PD_OUT=/root/repo/plans/r17 [PD_SUFFIX=before]
-  * [PD_DIR=/root/testdata/sf0.1]. One file per query:
+  * over SPARK_GRAFT_SF_DIR, in the [[Bench.session]]. One file per query:
   * <out>/<name>_<suffix>.txt — the judge-checkable plan evidence for
   * the optimization rounds.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("graft-plandump")
     val names = sys.env.getOrElse("PD_NAMES", "").split(",").filter(_.nonEmpty)
     require(names.nonEmpty, "PD_NAMES=a,b required")
     val out = sys.env.getOrElse("PD_OUT", "/root/repo/plans/r17")
     val suffix = sys.env.getOrElse("PD_SUFFIX", "before")
-    val dir = sys.env.getOrElse("PD_DIR", "/root/testdata/sf0.1")
+    val dir = Bench.sfDir
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)

@@ -1,10 +1,11 @@
 package graft.tools
 
+import graft.Bench
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (optimization-guide §1 applied to a
-  * UI-less local bench): QP_NAMES=a,b [QP_DIR=...] [QP_WARM=1].
+  * UI-less local bench): QP_NAMES=a,b [QP_WARM=1], over
+  * SPARK_GRAFT_SF_DIR in the [[Bench.session]].
   * For each named catalog query: one untimed warm pass, then one
   * profiled pass under a listener that records every JOB's wall
   * (submission→end) and every STAGE's task count / executor CPU /
@@ -18,18 +19,10 @@ object QProfile {
   case class JobRec(id: Int, wallMs: Long, stages: Seq[Int])
 
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Bench.session("graft-qprofile")
     val names = sys.env.getOrElse("QP_NAMES", "").split(",").filter(_.nonEmpty)
     require(names.nonEmpty, "QP_NAMES=a,b required")
-    val dir = sys.env.getOrElse("QP_DIR", "/root/testdata/sf0.1")
+    val dir = Bench.sfDir
     val warm = sys.env.getOrElse("QP_WARM", "1").toInt
 
     val jobs = scala.collection.concurrent.TrieMap[Int, (Long, Seq[Int])]()

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
+import graft.Bench.{f3, median}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,6 +31,7 @@ import org.apache.spark.sql.functions._
   *    product, E=0, sd≈1/√64) — far below every similarity threshold.
   *
   * Usage: Test/runMain graft.tools.ScaleBench [factor] [rounds]
+  * Replicates SPARK_GRAFT_SF_DIR and runs in the [[Bench.session]].
   * Writes the replica tables under /tmp/graft_sfx<factor>/ once
   * (reused if present) and prints one JSON line plus a markdown table
   * for BENCH_COMPARE.md.
@@ -278,17 +280,6 @@ object ScaleBench {
     // must be exactly linear like wordlist_filter
     "llm_robots_filter")
 
-  /** [[graft.llm.Similarity.semanticDedup]] measured in the regime the
-    * paper prescribes (SemDeDup scales clusters with data: 50k cells
-    * for LAION-440M), i.e. k ∝ N so the per-cell population — and with
-    * it the in-cell quadratic verify — stays CONSTANT as the corpus
-    * grows. The catalog query's fixed k=8 is correct for the oracle
-    * fixture but is the wrong thing to scale-measure: at fixed k the
-    * cell population grows with N and the pairwise stage is designed-
-    * quadratic (measured and recorded in SCALE.md, not a plan bug).
-    * Runs under the name `llm_semantic_dedup(k~N)` with k = 8·(size
-    * ratio), everything else identical to the catalog query.
-    */
   /** [[graft.llm.Similarity.cellMarginMine]] in its prescribed scaling
     * regime — cells ∝ N so per-cell populations (and the pairwise
     * margin work per unit of data) stay constant as the corpus grows.
@@ -304,6 +295,17 @@ object ScaleBench {
       kCells = kCells, iters = 3, k = 4, topN = 40)
   }
 
+  /** [[graft.llm.Similarity.semanticDedup]] measured in the regime the
+    * paper prescribes (SemDeDup scales clusters with data: 50k cells
+    * for LAION-440M), i.e. k ∝ N so the per-cell population — and with
+    * it the in-cell quadratic verify — stays CONSTANT as the corpus
+    * grows. The catalog query's fixed k=8 is correct for the oracle
+    * fixture but is the wrong thing to scale-measure: at fixed k the
+    * cell population grows with N and the pairwise stage is designed-
+    * quadratic (measured and recorded in SCALE.md, not a plan bug).
+    * Runs under the name `llm_semantic_dedup(k~N)` with k = 8·(size
+    * ratio), everything else identical to the catalog query.
+    */
   private def semanticDedupScaled(spark: SparkSession, dir: String, k: Int): DataFrame = {
     import graft.llm.Similarity
     val base = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -366,32 +368,22 @@ object ScaleBench {
     val MarginName = "llm_margin_mine(cells~N)"
     val all = Heavy ++ Seq(SemName, MarginName)
     val queries = if (subset.isEmpty) all else all.filter(subset.contains)
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = Bench.sfDir
     val bigDir  = s"/tmp/graft_sfx$factor"
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("graft-scale-bench")
+    val cpus = spark.sparkContext.defaultParallelism
 
     if (!new java.io.File(s"$bigDir/documents.parquet").exists()) {
       replicateDocs(spark.read.parquet(s"$baseDir/documents.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/documents.parquet")
       replicateEmbeddings(spark.read.parquet(s"$baseDir/embeddings.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/embeddings.parquet")
     }
     if (!new java.io.File(s"$bigDir/events.parquet").exists())
       replicateEvents(spark.read.parquet(s"$baseDir/events.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/events.parquet")
 
     // warmup (classloading/codegen) outside the timings
@@ -410,11 +402,6 @@ object ScaleBench {
       samples.updateWith(name -> dir)(s =>
         Some((System.nanoTime() - t0) / 1e9 :: s.getOrElse(Nil)))
     }
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def f(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     println(s"| query | t(sf0.1) s | t(${factor}x) s | ratio | exponent |")
     println("|---|---|---|---|---|")
     val rows = queries.map { name =>
@@ -422,8 +409,8 @@ object ScaleBench {
       val tN = median(samples(name -> bigDir))
       val ratio = tN / t1
       val expo  = math.log(ratio) / math.log(factor.toDouble)
-      println(s"| $name | ${f(t1)} | ${f(tN)} | ${f(ratio)} | ${f(expo)} |")
-      s""""$name":{"t1":${f(t1)},"tN":${f(tN)},"ratio":${f(ratio)},"exponent":${f(expo)}}"""
+      println(s"| $name | ${f3(t1)} | ${f3(tN)} | ${f3(ratio)} | ${f3(expo)} |")
+      s""""$name":{"t1":${f3(t1)},"tN":${f3(tN)},"ratio":${f3(ratio)},"exponent":${f3(expo)}}"""
     }
     println(s"""{"metric":"scaling","factor":$factor,"rounds":$rounds,"queries":${rows.mkString("{", ",", "}")}}""")
     spark.stop()
